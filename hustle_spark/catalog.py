@@ -16,9 +16,16 @@ directory remove — identical lifecycle, zero custom storage.
 
 Scale notes: at 100 TB the catalog dir sits on HDFS/S3; everything here
 is path manipulation + Spark reads, so nothing changes. Indexed columns
-(``index`` spec prefix) get Parquet bloom filters + a sort within
-partitions at write time — the analogue of hustle's EWAH bitmap
-indexes, enabling row-group skip on point predicates.
+(``index`` spec prefix) are sorted within every written file and carry
+the Parquet bloom-filter write option — together the analogue of
+hustle's EWAH bitmap indexes. The sort gives point predicates row-group
+skipping through tight min/max statistics. parquet-mr writes a column's
+bloom filter only when its chunk falls back from dictionary to plain
+encoding: with Spark 4.1's defaults, an int64 column with 1,000
+distinct values (5,000- or 100,000-row files) or 20,000 distinct in
+100,000 rows got none, while all-distinct files (5,000 or 100,000 rows)
+each carried a fixed 1 MiB filter, the writer's maximum when no
+expected distinct count is set.
 """
 
 from __future__ import annotations
@@ -27,6 +34,7 @@ import json
 import shutil
 import uuid
 from pathlib import Path
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,6 +43,16 @@ from .schema import TableSchema
 from .table import Table
 
 SCHEMA_FILE = "_hustle_schema.json"
+# directory value Spark writes for a NULL partition value
+HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _indexed(schema: TableSchema | None) -> list[str]:
+    """Indexed data columns (the partition column is indexed by its
+    directory layout, not by a sort or bloom filter)."""
+    if schema is None:
+        return []
+    return [c for c in schema.indexed_columns if c != schema.partition]
 
 
 def _nanos_timestamp_columns(path: Path) -> list[str]:
@@ -110,17 +128,19 @@ class Catalog:
         if name in self._cache:
             return self._cache[name]
         path, schema = self._resolve(name)
-        if (
-            schema is not None
-            and path.is_dir()
-            and not any(path.rglob("*.parquet"))
-        ):
+        if schema is None:
+            df = self._read_parquet(path)
+        elif not any(path.rglob("*.parquet")):
             # created but never written: empty relation from the
             # declared schema (a freshly-created hustle table is
             # queryable before its first insert)
             df = self.spark.createDataFrame([], schema.to_struct())
         else:
-            df = self._read_parquet(path)
+            # a declared table is read with its declared schema: no
+            # footer probe, no schema-inference job, and the partition
+            # column keeps its declared type (a `string date` partition
+            # stays a string instead of being inferred as DATE)
+            df = self.spark.read.schema(schema.to_struct()).parquet(str(path))
         t = Table(name, df, schema=schema, catalog=self)
         self._cache[name] = t
         return t
@@ -285,16 +305,18 @@ class Catalog:
         path, schema = self._resolve(name)
         writer = df.write.mode("append")
         if schema is not None:
-            indexed = [c for c in schema.indexed_columns if c != schema.partition]
+            keys = [schema.partition] if schema.partition else []
+            indexed = _indexed(schema)
             if indexed:
                 # sort + bloom filter per indexed column ~= hustle's
-                # per-value bitmap index
-                df = df.sortWithinPartitions(*indexed)
-                writer = df.write.mode("append")
+                # per-value bitmap index. The partition column leads the
+                # sort: Spark's planned write orders rows by it and
+                # would re-sort (dropping the index order) otherwise
+                writer = df.sortWithinPartitions(*keys, *indexed).write.mode("append")
                 for c in indexed:
                     writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
-            if schema.partition:
-                writer = writer.partitionBy(schema.partition)
+            if keys:
+                writer = writer.partitionBy(*keys)
         writer.parquet(str(path))
         self._cache.pop(name, None)
 
@@ -306,11 +328,34 @@ class Catalog:
         task (the 100 TB analogue of the reference's marble GC).
         Returns the number of data files after compaction.
 
-        Partitioned tables keep their hive layout (files coalesce
-        within each partition). Index options are preserved: indexed
-        columns are re-sorted within partitions and bloom filters are
-        re-written, so compaction also repairs sort/bloom locality lost
-        to many small appends.
+        The whole table is rewritten by ONE Spark write, whatever its
+        partition count (a scan + shuffle job and the write job):
+
+        - File sizing: each hive partition's bytes are listed on the
+          driver and give its file count ``n = ceil(bytes / target)``.
+          Rows are spread by ``repartition(sum(n), part, salt)`` with
+          ``salt = pmod(xxhash64(<data columns>), n[part])``, so a hot
+          partition larger than the target still splits into up to
+          ``n`` files while a small one stays one file. The salt is a
+          hash of the row, not ``rand()``, so a retried task rebuilds
+          exactly the rows it had. Hash collisions between
+          ``(part, salt)`` keys can only merge files, never lose rows.
+        - The read uses the DECLARED schema when the table has one: no
+          schema-inference job, files are rewritten in the declared
+          types with none of ``_read_parquet``'s read-time conversions
+          (nanos->micros, NTZ->LTZ) baked in, and partition values
+          round-trip as their directory strings — a ``string``
+          partition ``007`` stays ``007``, never a DATE or an integer.
+          A column outside the declared schema is not part of the table
+          (``table()`` never shows it) and is not rewritten. A table
+          without a sidecar is read as raw parquet.
+        - Rows are sorted within each task by ``(part, *indexed)``. The
+          partition column leads, which satisfies Spark's planned-write
+          ordering, so the index sort survives into every file. Bloom
+          filter options are re-applied to the indexed columns.
+
+        An unpartitioned table is the one-partition case of the same
+        path (no ``partitionBy``).
 
         Single-writer, single-process semantics (the engine's
         append-only model has no concurrent writers): the rewrite lands
@@ -334,63 +379,56 @@ class Catalog:
         data_files = [p for p in path.rglob("*.parquet")]
         if not data_files:
             return 0
-        target_bytes = target_file_mb * 1024 * 1024
-        staging = path.parent / f"_{name}.compact.{uuid.uuid4().hex[:8]}"
-        indexed = (
-            [c for c in schema.indexed_columns if c != schema.partition]
-            if schema is not None
-            else []
-        )
-
-        def write_coalesced(df: DataFrame, nbytes: int, dst: Path) -> None:
-            n_out = max(1, -(-nbytes // target_bytes))
-            out = df.repartition(int(n_out))
-            if indexed:
-                out = out.sortWithinPartitions(*indexed)
-            writer = out.write.mode("overwrite")
-            for c in indexed:
-                writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
-            writer.parquet(str(dst))
-
-        if schema is not None and schema.partition:
+        part = schema.partition if schema is not None else None
+        if part:
             stray = sorted(p.name for p in path.glob("*.parquet"))
             if stray:
                 # a foreign/manual write left data files at the table
-                # root; the per-partition copy below would silently
-                # drop them and the trash removal would destroy them
+                # root; the partitioned rewrite would silently drop them
+                # and the trash removal would destroy them
                 raise ValueError(
                     f"partitioned table {name!r} has non-hive data files "
                     f"at its root ({stray[:3]}{'...' if len(stray) > 3 else ''}); "
                     "refusing to compact — move them into a "
-                    f"{schema.partition}=<value>/ directory first"
+                    f"{part}=<value>/ directory first"
                 )
-            # size each hive partition independently: a hot partition
-            # larger than the target still splits into multiple files
-            # (a single repartition(n, part_col) would collapse every
-            # value into one task = one arbitrarily large file), and at
-            # cluster scale each partition is its own bounded job
-            staging.mkdir(parents=True)
-            for pdir in sorted(path.iterdir()):
-                if not pdir.is_dir() or "=" not in pdir.name:
-                    continue
-                pbytes = sum(p.stat().st_size for p in pdir.rglob("*.parquet"))
-                if pbytes == 0:
-                    continue
-                write_coalesced(
-                    self.spark.read.parquet(str(pdir)), pbytes, staging / pdir.name
-                )
+            # partition value as Spark reads it back from the directory
+            # name: unescaped, the default partition read as NULL
+            sizes = {
+                unquote(pdir.name.split("=", 1)[1]):
+                    sum(p.stat().st_size for p in pdir.rglob("*.parquet"))
+                for pdir in path.iterdir()
+                if pdir.is_dir() and "=" in pdir.name
+            }
+            key = F.coalesce(F.col(part).cast("string"), F.lit(HIVE_DEFAULT_PARTITION))
         else:
-            total_bytes = sum(p.stat().st_size for p in data_files)
-            # raw read, matching the partitioned branch: compaction must
-            # rewrite BYTES-equivalent data. Going through table(name).df
-            # would bake its read-time conversions (nanos->micros,
-            # NTZ->LTZ) into the files — silently changing on-disk types
-            # of foreign-written tables. Engine-written tables are
-            # already micros; a foreign nanos table now fails loudly
-            # here instead of being lossily rewritten.
-            write_coalesced(
-                self.spark.read.parquet(str(path)), total_bytes, staging
-            )
+            sizes = {"": sum(p.stat().st_size for p in data_files)}
+            key = F.lit("")
+        target_bytes = target_file_mb * 1024 * 1024
+        n_out = {v: max(1, -(-b // target_bytes)) for v, b in sizes.items()}
+
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema.to_struct())
+        df = reader.parquet(str(path))
+        # only partitions that split need a map entry; a key the map
+        # misses gets one file
+        split = [F.lit(x) for v, n in n_out.items() if n > 1 for x in (v, n)]
+        n_of = F.coalesce(F.create_map(*split)[key], F.lit(1)) if split else F.lit(1)
+        data_cols = [c for c in df.columns if c != part]
+        salt = F.pmod(F.xxhash64(*data_cols), n_of) if data_cols else F.lit(0)
+        keys = [part] if part else []
+        indexed = _indexed(schema)
+        out = df.repartition(sum(n_out.values()), *keys, salt)
+        if keys or indexed:
+            out = out.sortWithinPartitions(*keys, *indexed)
+        writer = out.write.mode("overwrite")
+        for c in indexed:
+            writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
+        if keys:
+            writer = writer.partitionBy(*keys)
+        staging = path.parent / f"_{name}.compact.{uuid.uuid4().hex[:8]}"
+        writer.parquet(str(staging))
         # carry the schema sidecar, then swap dirs
         sidecar = path / SCHEMA_FILE
         if sidecar.exists():

@@ -21,8 +21,9 @@ Mapping decisions (SURVEY.md section 1):
   ``DecimalType(20, 0)`` when ``strict_uint64=True`` else ``LongType``
   (documented range caveat — testdata has no uint64 values).
 - ``index`` / ``wide index`` become field-metadata hints that the write
-  path turns into a Parquet bloom filter + sort-within-partition, the
-  Spark analogue of hustle's EWAH bitmap indexes.
+  path turns into a sort within each file + the Parquet bloom-filter
+  option, the Spark analogue of hustle's EWAH bitmap indexes (the
+  catalog module docstring says when a filter is actually written).
 - EXT types beyond the reference (``double``, ``timestamp``, ``date``,
   ``json``, ``array<float>``...) are accepted because the driver
   testdata uses them.

@@ -56,7 +56,11 @@ def release_frames(frames) -> int:
     so correctness drivers that never call release_cached accumulated
     corpus-sized caches across a 50-query window). Callers release
     AFTER the consuming output is materialized (eager localCheckpoint
-    or collect) — unpersisting earlier would silently recompute."""
+    or collect). Releasing earlier costs differently per kind of
+    frame: a cached frame is recomputed from its lineage, but a
+    localCheckpoint()ed frame has no lineage left, so a premature
+    release is a HARD failure — the next consumer's job dies on
+    missing blocks, with no recompute."""
     n = 0
     ids = {id(f) for f in frames}
     for f in frames:
@@ -71,7 +75,8 @@ def release_frames(frames) -> int:
         # ContextCleaner GCs it (r15; ADVICE r14 on the CC edge
         # checkpoint). Release them NOW; the probe throws on any
         # non-checkpoint plan and is ignored. Only safe once every
-        # consumer of the frame is done — same contract as unpersist.
+        # consumer of the frame is done: unlike unpersist, there is no
+        # recompute behind this release.
         try:
             f._jdf.queryExecution().analyzed().rdd().unpersist(False)
         except Exception:
@@ -142,6 +147,16 @@ def spread_input(df, spark):
 _FOOTER_ROWS: dict = {}
 
 
+def _local_path(uri: str) -> str:
+    """Filesystem path of a ``file:`` URI in any of its spellings
+    (``file:///x``, ``file:/x``, percent-escaped); other strings are
+    returned as given."""
+    from urllib.parse import unquote, urlparse
+
+    u = urlparse(uri)
+    return unquote(u.path) if u.scheme == "file" else uri
+
+
 def stat_partitions(df, spark, rows_per_task: int = 512) -> int:
     """Input-stat-derived partition count for per-row-bounded Arrow
     stages (the mapInPandas media decodes): ceil(rows / rows_per_task)
@@ -153,8 +168,9 @@ def stat_partitions(df, spark, rows_per_task: int = 512) -> int:
     parallelism — the honest version of the partition shrink r14
     declined as a bench-tuned constant. Row counts come from the
     parquet footers of ``df``'s input files, read driver-side (no
-    Spark job); any failure (non-parquet source, no files) falls back
-    to defaultParallelism, i.e. the old behavior."""
+    Spark job); any failure (non-parquet source, no files, a footer
+    read error) falls back to defaultParallelism, i.e. the old
+    behavior. Only successful footer reads are memoized."""
     import math
 
     par = spark.sparkContext.defaultParallelism
@@ -170,13 +186,14 @@ def stat_partitions(df, spark, rows_per_task: int = 512) -> int:
             import pyarrow.parquet as pq
 
             n_rows = sum(
-                pq.ParquetFile(f[7:] if f.startswith("file://") else f)
-                .metadata.num_rows
+                pq.ParquetFile(_local_path(f)).metadata.num_rows
                 for f in files
                 if f.endswith(".parquet")
             )
         except Exception:
-            n_rows = 0
+            # not memoized: a transient read failure must not pin the
+            # fallback for the rest of the session
+            return par
         _FOOTER_ROWS[files] = n_rows
     if not n_rows:
         return par

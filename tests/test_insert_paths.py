@@ -1,6 +1,7 @@
 """S3 bulk-insert parity: every decoder and hook path of insert()."""
 
 import json
+from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
@@ -324,3 +325,127 @@ def test_insert_recoerce_after_preprocess(spark, tmp_path):
     t = cat.table("ev").df
     assert sorted(t.columns) == ["day", "k"]
     assert dict(t.dtypes)["k"] == "bigint"
+
+
+# ---- one-write compaction, declared-schema resolution, append order ----
+
+
+@contextmanager
+def counted_jobs(spark, group):
+    """Count the Spark jobs started inside the block (listener bus
+    drained on both sides, so no job is missed or misattributed)."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    sc.setJobGroup(group, group)
+    jobs: list = []
+    try:
+        yield jobs
+    finally:
+        bus.waitUntilEmpty()
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def assert_files_sorted(table_dir, column):
+    import pyarrow.parquet as pq
+
+    files = sorted(table_dir.rglob("*.parquet"))
+    assert files
+    for f in files:
+        vals = pq.read_table(f, columns=[column]).column(0).to_pylist()
+        assert vals == sorted(vals), f"{f.relative_to(table_dir)} not sorted on {column}"
+
+
+def hive_dirs(table_dir):
+    return sorted(p.name for p in table_dir.iterdir() if p.is_dir())
+
+
+def test_compact_one_write_keeps_rows_dirs_sort_and_splits(spark, tmp_path):
+    """Compaction rewrites a partitioned table in one Spark write: rows
+    identical, partition dirs verbatim (a non-date string and the NULL
+    default partition included), a partition above the target split into
+    several files, every file sorted on the indexed column."""
+    cat = h.connect(spark, tmp_path)
+    cat.create("ev", ["index string date", "index uint32 user_id", "string tag"], partition="date")
+    rows = spark.range(60000).select(
+        # 80% of rows in the big partition, the rest in '007' and NULL
+        F.when(F.col("id") % 10 < 8, "2014-01-20")
+        .when(F.col("id") % 10 == 8, "007")
+        .alias("date"),
+        # few distinct ids: dictionary-encoded, so no 1 MiB bloom filter
+        # per file inflates the partition sizes
+        (F.col("id") * 7919 % 1000).alias("user_id"),
+        F.sha2(F.col("id").cast("string"), 256).alias("tag"),
+    )
+    for k in range(3):
+        cat.append("ev", rows.filter(F.col("user_id") % 3 == k))
+    table_dir = tmp_path / "ev"
+    big = table_dir / "date=2014-01-20"
+    assert sum(p.stat().st_size for p in big.glob("*.parquet")) > 1024 * 1024
+    dirs = hive_dirs(table_dir)
+    assert {"date=007", "date=2014-01-20", "date=__HIVE_DEFAULT_PARTITION__"} <= set(dirs)
+    before = sorted(map(tuple, cat.table("ev").df.collect()), key=str)
+
+    n = cat.compact("ev", target_file_mb=1)
+
+    assert n == len(list(table_dir.rglob("*.parquet")))
+    assert hive_dirs(table_dir) == dirs
+    assert len(list(big.glob("*.parquet"))) > 1
+    for small in ("date=007", "date=__HIVE_DEFAULT_PARTITION__"):
+        assert len(list((table_dir / small).glob("*.parquet"))) == 1
+    assert sorted(map(tuple, cat.table("ev").df.collect()), key=str) == before
+    assert_files_sorted(table_dir, "user_id")
+    assert cat.partitions("ev") == ["007", "2014-01-20", "__HIVE_DEFAULT_PARTITION__"]
+
+
+def test_compact_job_count_is_independent_of_partitions(spark, tmp_path):
+    """Guard: one compaction is a bounded number of Spark jobs (a scan +
+    shuffle job and the write job), not a few jobs per partition."""
+    cat = h.connect(spark, tmp_path)
+    for n_parts in (2, 8):
+        name = f"p{n_parts}"
+        cat.create(name, ["string day", "index uint32 k"], partition="day")
+        for _ in range(2):
+            cat.append(name, spark.range(64).select(
+                F.format_string("d%02d", F.col("id") % n_parts).alias("day"),
+                (F.col("id") * 31 % 64).alias("k"),
+            ))
+        with counted_jobs(spark, f"compact-{name}") as jobs:
+            assert cat.compact(name) == n_parts
+        assert 1 <= len(jobs) <= 3, (n_parts, jobs)
+
+
+def test_declared_table_resolves_without_jobs_and_keeps_string_partition(spark, tmp_path):
+    """A table with a sidecar is read with its declared schema: the
+    `string` partition column comes back as a string (not DATE), and
+    re-resolving after an insert starts no Spark job before the action."""
+    cat = h.connect(spark, tmp_path)
+    make_table(cat)
+    src = tmp_path / "in.json"
+    src.write_text("\n".join(
+        json.dumps({"date": f"2014-01-2{i % 2}", "n": i, "tag": "t"}) for i in range(6)))
+    assert h.insert(cat, "ev", phile=str(src)) == 6
+    assert h.insert(cat, "ev", phile=str(src)) == 6  # drops the Table cache
+    with counted_jobs(spark, "resolve-declared") as jobs:
+        t = cat.table("ev")
+        q = h.select(t.date, t.n, where=t.n > 2)
+    assert jobs == []
+    assert dict(t.df.dtypes)["date"] == "string"
+    got = sorted(tuple(r) for r in q.collect())
+    assert got == sorted([("2014-01-21", 3), ("2014-01-20", 4), ("2014-01-21", 5)] * 2)
+
+
+def test_partitioned_insert_files_sorted_on_index(spark, tmp_path):
+    """Every file of an indexed, partitioned insert is non-decreasing on
+    the indexed column: the append sort leads with the partition column,
+    so Spark's planned write keeps the index order instead of re-sorting."""
+    cat = h.connect(spark, tmp_path)
+    cat.create("ev", ["string date", "index uint32 user_id", "string tag"], partition="date")
+    src = tmp_path / "in.json"
+    src.write_text("\n".join(
+        json.dumps({"date": f"2014-01-2{i % 3}", "user_id": i * 7919 % 1009, "tag": "t"})
+        for i in range(3000)))
+    assert h.insert(cat, "ev", phile=str(src)) == 3000
+    assert len(cat.partitions("ev")) == 3
+    assert_files_sorted(tmp_path / "ev", "user_id")

@@ -1,26 +1,15 @@
-"""Driver-row CANDIDATES — registry-ready (query function + oracle
-SQL) pairs staged ahead of their driver-window flip.
+"""The curation, media, retrieval and streaming rows of the query
+registry: 70 named (query function, DuckDB oracle SQL) pairs, split
+out of registry.py only to keep that file readable.
 
-Why staged at all: tests/test_window_invariant.py rightly forces
-every REGISTERED new query into the 50-slot driver window, and the
-window also owes >=90% re-confirmation of previously-proven rows per
-round — so new rows land in waves instead of displacing the
-staleness rotation wholesale. Each candidate's machinery is
-unit-proven with a full differential oracle before it ever appears
-here (tests/test_operators.py, tests/test_urls.py); this module pins
-the exact (query fn, oracle SQL) pair registration lifts verbatim,
-and tests/test_candidates.py runs every STILL-STAGED pair against
-DuckDB at the gate SF so each flip is a mechanical edit, not new
-work.
-
-Round-8 state: ``FLIPPED_R8`` (17 rows — the verdict-directed wave 1:
-the whole curation chain, pagerank, TF-IDF retrieval, the
-suffix-array pair, CSV, progressive JPEG, robots, BPE encode) is
-registered by registry.py's flip block; ``STAGED_CANDIDATES`` holds the
-wave-2 remainder for r9. To promote in r9: move names from
-STAGED_CANDIDATES into the registry flip list, add them to
-``_NEW_THIS_ROUND``, displace backfill to ``_QUEUED_NEXT``, re-run
-scripts/update_query_hashes.py.
+Each row is its function, then its oracle constant, then one
+``query(name, oracle)(fn)`` call, the same ``registry.query`` that
+registers every other row. The call form (not ``@query``) keeps each
+row's content hash unchanged: ``inspect.getsource`` includes decorator
+lines, and ``registry.query_content_hashes`` / docs/query_hashes.json
+pin those hashes. registry.py imports this module at its end, so
+``registry.QUERIES`` holds every row whichever module is imported
+first.
 """
 
 from __future__ import annotations
@@ -31,7 +20,7 @@ from . import util as _util
 from .functions import text as TX
 from .functions import urls as URLS
 from .operators import asof, dedup, multimodal, similarity, sketches, suffixes
-from .registry import _URL_MODEL_SQL, _cat
+from .registry import QUERIES, _URL_MODEL_SQL, _cat, query
 from .sources import tarball, ziparchive
 
 
@@ -78,6 +67,11 @@ MULTIMODAL_JPEG_PROGRESSIVE_ORACLE = """
            true AS ok
     FROM px GROUP BY doc_id
 """
+
+query(
+    "multimodal_jpeg_progressive_probe",
+    MULTIMODAL_JPEG_PROGRESSIVE_ORACLE,
+)(multimodal_jpeg_progressive_probe)
 
 
 def url_robots_filter(spark, sf_dir):
@@ -136,6 +130,8 @@ URL_ROBOTS_FILTER_ORACLE = f"""
              ELSE NULL END AS crawl_delay
     FROM canon JOIN p ON canon.doc_id = p.doc_id
 """
+
+query("url_robots_filter", URL_ROBOTS_FILTER_ORACLE)(url_robots_filter)
 
 
 def dedup_semantic_centroid(spark, sf_dir):
@@ -196,6 +192,11 @@ DEDUP_SEMANTIC_CENTROID_ORACLE = """
            r.centrality_u, d.vec_id IS NULL AS kept
     FROM ranked r LEFT JOIN dom d ON r.vec_id = d.vec_id
 """
+
+query(
+    "dedup_semantic_centroid",
+    DEDUP_SEMANTIC_CENTROID_ORACLE,
+)(dedup_semantic_centroid)
 
 
 def dedup_substring_groups(spark, sf_dir):
@@ -262,6 +263,11 @@ DEDUP_SUBSTRING_GROUPS_ORACLE = r"""
     FROM runs GROUP BY g
     HAVING COUNT(DISTINCT doc_id) >= 2
 """
+
+query(
+    "dedup_substring_groups",
+    DEDUP_SUBSTRING_GROUPS_ORACLE,
+)(dedup_substring_groups)
 
 
 def dedup_substring_removal(spark, sf_dir):
@@ -354,6 +360,11 @@ DEDUP_SUBSTRING_REMOVAL_ORACLE = r"""
              AS n_removed
     FROM docs d
 """
+
+query(
+    "dedup_substring_removal",
+    DEDUP_SUBSTRING_REMOVAL_ORACLE,
+)(dedup_substring_removal)
 
 
 def dedup_exact_substr_combined(spark, sf_dir):
@@ -482,6 +493,11 @@ DEDUP_EXACT_SUBSTR_COMBINED_ORACLE = r"""
     FROM docs d
 """
 
+query(
+    "dedup_exact_substr_combined",
+    DEDUP_EXACT_SUBSTR_COMBINED_ORACLE,
+)(dedup_exact_substr_combined)
+
 
 def text_lm_perplexity(spark, sf_dir):
     """L34 CCNet-style LM quality bucketing (Wenzek et al., LREC
@@ -539,6 +555,8 @@ TEXT_LM_PERPLEXITY_ORACLE = r"""
     UNION ALL
     SELECT doc_id, 0, 0, NULL, 'unscored' FROM tok WHERE len(t) < 2
 """
+
+query("text_lm_perplexity", TEXT_LM_PERPLEXITY_ORACLE)(text_lm_perplexity)
 
 
 def text_unicode_hygiene(spark, sf_dir):
@@ -612,6 +630,11 @@ TEXT_UNICODE_HYGIENE_ORACLE = (
     )
 )
 
+query(
+    "text_unicode_hygiene",
+    TEXT_UNICODE_HYGIENE_ORACLE,
+)(text_unicode_hygiene)
+
 
 def text_blocklist(spark, sf_dir):
     """L36 term-blocklist screening (the NSFW/spam wordlist stage, on
@@ -638,6 +661,8 @@ TEXT_BLOCKLIST_ORACLE = r"""
                '\b(?:table|merge|scan)\b')) > 2 AS blocked
     FROM documents
 """
+
+query("text_blocklist", TEXT_BLOCKLIST_ORACLE)(text_blocklist)
 
 
 def text_gopher_quality(spark, sf_dir):
@@ -694,6 +719,8 @@ TEXT_GOPHER_QUALITY_ORACLE = r"""
             AND nstop >= 2) AS passes
     FROM s
 """
+
+query("text_gopher_quality", TEXT_GOPHER_QUALITY_ORACLE)(text_gopher_quality)
 
 
 def text_gopher_repetition(spark, sf_dir):
@@ -779,6 +806,11 @@ TEXT_GOPHER_REPETITION_ORACLE = r"""
     JOIN g5agg a5 USING (doc_id)
 """
 
+query(
+    "text_gopher_repetition",
+    TEXT_GOPHER_REPETITION_ORACLE,
+)(text_gopher_repetition)
+
 
 def dedup_lines_corpus(spark, sf_dir):
     """L38 corpus-level line dedup (CCNet / C4 span dedup): drop every
@@ -818,6 +850,8 @@ DEDUP_LINES_CORPUS_ORACLE = r"""
              AS kept_md5
     FROM flagged GROUP BY doc_id
 """
+
+query("dedup_lines_corpus", DEDUP_LINES_CORPUS_ORACLE)(dedup_lines_corpus)
 
 
 def text_quality_classifier(spark, sf_dir):
@@ -863,6 +897,11 @@ TEXT_QUALITY_CLASSIFIER_ORACLE = r"""
            SUM(w) > 0 AS quality_ok
     FROM w GROUP BY doc_id
 """
+
+query(
+    "text_quality_classifier",
+    TEXT_QUALITY_CLASSIFIER_ORACLE,
+)(text_quality_classifier)
 
 
 def warc_meta_noindex(spark, sf_dir):
@@ -910,6 +949,8 @@ WARC_META_NOINDEX_ORACLE = """
     FROM documents
 """
 
+query("warc_meta_noindex", WARC_META_NOINDEX_ORACLE)(warc_meta_noindex)
+
 
 def multimodal_image_ahash(spark, sf_dir):
     """L5i perceptual image hashing (aHash) — the multimodal
@@ -953,6 +994,11 @@ MULTIMODAL_IMAGE_AHASH_ORACLE = """
     FROM cells c JOIN tot t USING (doc_id)
     GROUP BY c.doc_id
 """
+
+query(
+    "multimodal_image_ahash",
+    MULTIMODAL_IMAGE_AHASH_ORACLE,
+)(multimodal_image_ahash)
 
 
 _BPE_EXPORT_MERGES = [
@@ -1019,6 +1065,8 @@ BPE_ENCODE_CORPUS_ORACLE = f"""
     FROM s4
 """
 
+query("bpe_encode_corpus", BPE_ENCODE_CORPUS_ORACLE)(bpe_encode_corpus)
+
 
 def multimodal_png_probe(spark, sf_dir):
     """L5p PNG pixel decode at driver grade (closes the last
@@ -1066,6 +1114,11 @@ MULTIMODAL_PNG_PROBE_ORACLE = """
     WHERE g.x < d.doc_id % 5 + 4 AND gy.y < d.doc_id % 7 + 3
     GROUP BY d.doc_id
 """
+
+query(
+    "multimodal_png_probe",
+    MULTIMODAL_PNG_PROBE_ORACLE,
+)(multimodal_png_probe)
 
 
 def multimodal_image_phash(spark, sf_dir):
@@ -1142,6 +1195,11 @@ def _phash_oracle() -> str:
 
 MULTIMODAL_IMAGE_PHASH_ORACLE = _phash_oracle()
 
+query(
+    "multimodal_image_phash",
+    MULTIMODAL_IMAGE_PHASH_ORACLE,
+)(multimodal_image_phash)
+
 
 def audio_pitch_probe(spark, sf_dir):
     """L5a audio ANALYSIS level (upgrades the sample-level decode to
@@ -1210,6 +1268,8 @@ AUDIO_PITCH_PROBE_ORACLE = """
     FROM m JOIN best b ON b.doc_id = m.doc_id
 """
 
+query("audio_pitch_probe", AUDIO_PITCH_PROBE_ORACLE)(audio_pitch_probe)
+
 
 def multimodal_exif_probe(spark, sf_dir):
     """L5m image METADATA level (Exif): JPEGs carrying a real APP1
@@ -1245,6 +1305,11 @@ MULTIMODAL_EXIF_PROBE_ORACLE = """
            true AS ok
     FROM documents
 """
+
+query(
+    "multimodal_exif_probe",
+    MULTIMODAL_EXIF_PROBE_ORACLE,
+)(multimodal_exif_probe)
 
 
 def multimodal_video_scenes(spark, sf_dir):
@@ -1291,6 +1356,11 @@ MULTIMODAL_VIDEO_SCENES_ORACLE = """
     FROM m LEFT JOIN bd ON bd.doc_id = m.doc_id
     GROUP BY m.doc_id, m.n
 """
+
+query(
+    "multimodal_video_scenes",
+    MULTIMODAL_VIDEO_SCENES_ORACLE,
+)(multimodal_video_scenes)
 
 
 def graph_pagerank(spark, sf_dir):
@@ -1344,6 +1414,8 @@ def _pagerank_oracle(n_iter: int = 3) -> str:
 
 
 GRAPH_PAGERANK_ORACLE = _pagerank_oracle()
+
+query("graph_pagerank", GRAPH_PAGERANK_ORACLE)(graph_pagerank)
 
 
 _TFIDF_QUERIES = [
@@ -1407,6 +1479,11 @@ RETRIEVAL_TFIDF_TOPK_ORACLE = r"""
     FROM r WHERE rnk <= 5
 """
 
+query(
+    "retrieval_tfidf_topk",
+    RETRIEVAL_TFIDF_TOPK_ORACLE,
+)(retrieval_tfidf_topk)
+
 
 def retrieval_bm25_topk(spark, sf_dir):
     """L43b fixed-point BM25 retrieval (operators/retrieval.py
@@ -1469,6 +1546,8 @@ RETRIEVAL_BM25_TOPK_ORACLE = r"""
            CAST(rnk AS BIGINT) AS rnk
     FROM r WHERE rnk <= 5
 """
+
+query("retrieval_bm25_topk", RETRIEVAL_BM25_TOPK_ORACLE)(retrieval_bm25_topk)
 
 
 def retrieval_rrf_fusion(spark, sf_dir):
@@ -1540,6 +1619,11 @@ RETRIEVAL_RRF_FUSION_ORACLE = (
     "       CAST(rnk AS BIGINT) AS rnk\n"
     "FROM r WHERE rnk <= 5"
 ).format(bm=RETRIEVAL_BM25_TOPK_ORACLE, tfi=RETRIEVAL_TFIDF_TOPK_ORACLE)
+
+query(
+    "retrieval_rrf_fusion",
+    RETRIEVAL_RRF_FUSION_ORACLE,
+)(retrieval_rrf_fusion)
 
 
 def retrieval_bm25_rank_agreement(spark, sf_dir):
@@ -1653,6 +1737,11 @@ RETRIEVAL_BM25_RANK_AGREEMENT_ORACLE = r"""
     GROUP BY f.query_id
 """
 
+query(
+    "retrieval_bm25_rank_agreement",
+    RETRIEVAL_BM25_RANK_AGREEMENT_ORACLE,
+)(retrieval_bm25_rank_agreement)
+
 
 def csv_roundtrip_agg(spark, sf_dir):
     """S10b CSV source/sink parity (closes the one readers.py format
@@ -1714,6 +1803,8 @@ CSV_ROUNDTRIP_AGG_ORACLE = """
     WHERE c_mktsegment = 'BUILDING'
     GROUP BY c_nationkey
 """
+
+query("csv_roundtrip_agg", CSV_ROUNDTRIP_AGG_ORACLE)(csv_roundtrip_agg)
 
 
 def dedup_image_phash_groups(spark, sf_dir):
@@ -1786,6 +1877,11 @@ def _phash_groups_oracle() -> str:
 
 DEDUP_IMAGE_PHASH_GROUPS_ORACLE = _phash_groups_oracle()
 
+query(
+    "dedup_image_phash_groups",
+    DEDUP_IMAGE_PHASH_GROUPS_ORACLE,
+)(dedup_image_phash_groups)
+
 
 def audio_segments_probe(spark, sf_dir):
     """L5a2 audio SEGMENTATION (ASR-corpus chunking — completes the
@@ -1854,6 +1950,22 @@ AUDIO_SEGMENTS_PROBE_ORACLE = """
     FROM m JOIN agg a ON a.doc_id = m.doc_id
 """
 
+query(
+    "audio_segments_probe",
+    AUDIO_SEGMENTS_PROBE_ORACLE,
+)(audio_segments_probe)
+
+# audio_vad_table_probe (registry.py) gates the VAD table LOADER
+# against this replay: the 'recovered' audit column dropped, the
+# loaded step count added, so the generative model and the window
+# classifier cannot drift between the two rows.
+QUERIES["audio_vad_table_probe"].oracle = (
+    "SELECT media_id, media_type, n_samples, n_windows, n_segments,"
+    " n_speech_windows, ok, CAST(3 AS BIGINT) AS n_steps_loaded FROM ("
+    + AUDIO_SEGMENTS_PROBE_ORACLE
+    + ")"
+)
+
 
 def text_lexical_diversity(spark, sf_dir):
     """L44 lexical-diversity quality signal (functions.text
@@ -1893,6 +2005,11 @@ TEXT_LEXICAL_DIVERSITY_ORACLE = r"""
                 AS BIGINT) AS simpson_scaled
     FROM a
 """
+
+query(
+    "text_lexical_diversity",
+    TEXT_LEXICAL_DIVERSITY_ORACLE,
+)(text_lexical_diversity)
 
 
 _CODE_BLOCK = "def f(x):\n    y = x + 1;\n    return y\n}\nz = f(2);"
@@ -1962,6 +2079,8 @@ TEXT_CODE_DETECT_ORACLE = """
     FROM t JOIN v ON v.doc_id = t.doc_id
 """
 
+query("text_code_detect", TEXT_CODE_DETECT_ORACLE)(text_code_detect)
+
 
 def embedding_matryoshka_audit(spark, sf_dir):
     """L46 matryoshka-readiness audit (Kusupati et al. MRL): how much
@@ -2025,6 +2144,11 @@ EMBEDDING_MATRYOSHKA_AUDIT_ORACLE = """
              AS frac_micro
     FROM s
 """
+
+query(
+    "embedding_matryoshka_audit",
+    EMBEDDING_MATRYOSHKA_AUDIT_ORACLE,
+)(embedding_matryoshka_audit)
 
 
 def embedding_pq_audit(spark, sf_dir):
@@ -2129,6 +2253,8 @@ EMBEDDING_PQ_AUDIT_ORACLE = """
     GROUP BY d.label
 """
 
+query("embedding_pq_audit", EMBEDDING_PQ_AUDIT_ORACLE)(embedding_pq_audit)
+
 
 def events_rolling_actives(spark, sf_dir):
     """L48 rolling active users (DAU / 7-day WAU) — the event-
@@ -2170,6 +2296,11 @@ EVENTS_ROLLING_ACTIVES_ORACLE = """
             GROUP BY d.day)
     SELECT d.day, d.dau, w.wau FROM dau d JOIN wau w USING (day)
 """
+
+query(
+    "events_rolling_actives",
+    EVENTS_ROLLING_ACTIVES_ORACLE,
+)(events_rolling_actives)
 
 
 def sketch_rollup_actives(spark, sf_dir):
@@ -2228,6 +2359,11 @@ SKETCH_ROLLUP_ACTIVES_ORACLE = """
            true AS sketch_ok
     FROM w GROUP BY week
 """
+
+query(
+    "sketch_rollup_actives",
+    SKETCH_ROLLUP_ACTIVES_ORACLE,
+)(sketch_rollup_actives)
 
 
 def text_curation_verdict(spark, sf_dir):
@@ -2290,26 +2426,12 @@ TEXT_CURATION_VERDICT_ORACLE = _CURATION_VERDICT_TEMPLATE.format(
     classifier=TEXT_QUALITY_CLASSIFIER_ORACLE,
 )
 
+query(
+    "text_curation_verdict",
+    TEXT_CURATION_VERDICT_ORACLE,
+)(text_curation_verdict)
 
-# name -> (query fn, oracle SQL) — the exact pairs the r8 @query
-# registrations lift; tests/test_candidates.py drives every pair
-# against DuckDB at the gate SF.
-# Suggested r8 flip (33 staged rows cannot all be _NEW in one 50-slot
-# window at the >=90% re-confirmation norm — split r8/r9):
-#   r8 _CHANGED: the owed helper-refactor promotions
-#     (multimodal_frame_sample, multimodal_audio_samples,
-#      multimodal_audio_probe, multimodal_pixel_probe,
-#      multimodal_resize_probe — byte-identical refactors,
-#      oracle-reproven this session, promoted per protocol);
-#   r8 _NEW (first half, oldest-staged first): the 8 original entries
-#     + gopher pair + lines/classifier/noindex/ahash/curation;
-#   r9 _NEW: the session-3 batch (png, bpe, phash(+groups), pitch,
-#     segments, exif, scenes, pagerank, tfidf, csv, diversity,
-#     code_detect, matryoshka, pq, rolling actives, sketch rollup,
-#     corpus_build_pipeline).
-# Keep ~30 backfill slots per round from _QUEUED_NEXT so the
-# re-confirmation share stays documented and high; re-sync this
-# comment against len(STAGED_CANDIDATES) at every addition.
+
 def corpus_build_pipeline(spark, sf_dir):
     """L50 END-TO-END corpus build (the capstone composition): the
     five-stage curation gate decides keep per document, the kept set
@@ -2376,6 +2498,11 @@ CORPUS_BUILD_PIPELINE_ORACLE = f"""
              AS waste_permille
     FROM a
 """
+
+query(
+    "corpus_build_pipeline",
+    CORPUS_BUILD_PIPELINE_ORACLE,
+)(corpus_build_pipeline)
 
 
 def data_selection_dsir(spark, sf_dir):
@@ -2456,6 +2583,8 @@ DATA_SELECTION_DSIR_ORACLE = r"""
            rnk < 100 AS selected
     FROM r
 """
+
+query("data_selection_dsir", DATA_SELECTION_DSIR_ORACLE)(data_selection_dsir)
 
 
 def ann_ivf_pq_search(spark, sf_dir):
@@ -2571,6 +2700,8 @@ ANN_IVF_PQ_SEARCH_ORACLE = """
     WHERE h.rnk <= 5
 """
 
+query("ann_ivf_pq_search", ANN_IVF_PQ_SEARCH_ORACLE)(ann_ivf_pq_search)
+
 
 def streaming_curation_requery(spark, sf_dir):
     """S7/L40 the composed curation gate as a STRUCTURED STREAMING
@@ -2647,6 +2778,11 @@ def streaming_curation_requery(spark, sf_dir):
         "doc_id", "is_clean", "passes", "is_repetitive", "quality_ok",
         "blocked", "fail_mask", "keep",
     )
+
+query(
+    "streaming_curation_requery",
+    TEXT_CURATION_VERDICT_ORACLE,
+)(streaming_curation_requery)
 
 
 def text_unicode_repair(spark, sf_dir):
@@ -2740,6 +2876,8 @@ TEXT_UNICODE_REPAIR_ORACLE = r"""
     "__MOJI_T__", _sql_moji_count("t")
 ).replace("__MOJI_RR__", _sql_moji_count("rr"))
 
+query("text_unicode_repair", TEXT_UNICODE_REPAIR_ORACLE)(text_unicode_repair)
+
 
 def dedup_jaccard_ngram(spark, sf_dir):
     """L2e EXACT n-gram Jaccard near-dup pairs (staged r10 for the r11
@@ -2790,6 +2928,8 @@ DEDUP_JACCARD_NGRAM_ORACLE = r"""
     WHERE (1000000 * shr.shared) // (na.n_fp + nb.n_fp - shr.shared)
           >= 300000
 """
+
+query("dedup_jaccard_ngram", DEDUP_JACCARD_NGRAM_ORACLE)(dedup_jaccard_ngram)
 
 
 def dedup_jaccard_clusters(spark, sf_dir):
@@ -2870,6 +3010,11 @@ DEDUP_JACCARD_CLUSTERS_ORACLE = r"""
            ) = 1 AS is_kept
     FROM documents d LEFT JOIN lab l ON l.id = d.doc_id
 """
+
+query(
+    "dedup_jaccard_clusters",
+    DEDUP_JACCARD_CLUSTERS_ORACLE,
+)(dedup_jaccard_clusters)
 
 
 def dedup_jaccard_minhash_agreement(spark, sf_dir):
@@ -3004,6 +3149,11 @@ DEDUP_JACCARD_MINHASH_AGREEMENT_ORACLE = r"""
       ON hits.a = exact.a AND hits.b = exact.b
 """
 
+query(
+    "dedup_jaccard_minhash_agreement",
+    DEDUP_JACCARD_MINHASH_AGREEMENT_ORACLE,
+)(dedup_jaccard_minhash_agreement)
+
 
 def events_heavy_hitters_cms(spark, sf_dir):
     """L52 count–min-sketch heavy hitters (staged r10-cont for a
@@ -3083,6 +3233,11 @@ EVENTS_HEAVY_HITTERS_CMS_ORACLE = """
     LIMIT 10
 """
 
+query(
+    "events_heavy_hitters_cms",
+    EVENTS_HEAVY_HITTERS_CMS_ORACLE,
+)(events_heavy_hitters_cms)
+
 
 def embedding_hard_negatives(spark, sf_dir):
     """L53 hard-negative mining for contrastive training (staged
@@ -3128,6 +3283,11 @@ EMBEDDING_HARD_NEGATIVES_ORACLE = """
     WHERE rank <= 3
 """
 
+query(
+    "embedding_hard_negatives",
+    EMBEDDING_HARD_NEGATIVES_ORACLE,
+)(embedding_hard_negatives)
+
 
 def text_token_fertility(spark, sf_dir):
     """L54 tokenizer fertility / compression diagnostics (staged
@@ -3164,6 +3324,11 @@ TEXT_TOKEN_FERTILITY_ORACLE = r"""
              AS bpe_per_ws_u
     FROM per GROUP BY lang
 """
+
+query(
+    "text_token_fertility",
+    TEXT_TOKEN_FERTILITY_ORACLE,
+)(text_token_fertility)
 
 
 def zip_archive_probe(spark, sf_dir):
@@ -3203,6 +3368,8 @@ ZIP_ARCHIVE_PROBE_ORACLE = """
            true AS ok
     FROM m GROUP BY shard
 """
+
+query("zip_archive_probe", ZIP_ARCHIVE_PROBE_ORACLE)(zip_archive_probe)
 
 
 def mixture_epoch_upsampling(spark, sf_dir):
@@ -3283,6 +3450,11 @@ MIXTURE_EPOCH_UPSAMPLING_ORACLE = r"""
     FROM w GROUP BY source
 """
 
+query(
+    "mixture_epoch_upsampling",
+    MIXTURE_EPOCH_UPSAMPLING_ORACLE,
+)(mixture_epoch_upsampling)
+
 
 def tar_webdataset_probe(spark, sf_dir):
     """S12 WebDataset tar shards at driver grade (staged r10-cont;
@@ -3335,6 +3507,11 @@ TAR_WEBDATASET_PROBE_ORACLE = """
            true AS ok
     FROM m GROUP BY shard
 """
+
+query(
+    "tar_webdataset_probe",
+    TAR_WEBDATASET_PROBE_ORACLE,
+)(tar_webdataset_probe)
 
 
 def tar_streaming_pack_requery(spark, sf_dir):
@@ -3417,6 +3594,11 @@ TAR_STREAMING_PACK_REQUERY_ORACLE = """
     FROM m GROUP BY shard
 """
 
+query(
+    "tar_streaming_pack_requery",
+    TAR_STREAMING_PACK_REQUERY_ORACLE,
+)(tar_streaming_pack_requery)
+
 
 def tar_webdataset_samples(spark, sf_dir):
     """S12c WebDataset SAMPLE reader (staged r11): the consumption
@@ -3473,6 +3655,11 @@ TAR_WEBDATASET_SAMPLES_ORACLE = """
            true AS complete
     FROM documents d, ns
 """
+
+query(
+    "tar_webdataset_samples",
+    TAR_WEBDATASET_SAMPLES_ORACLE,
+)(tar_webdataset_samples)
 
 
 def zip_streaming_pack_requery(spark, sf_dir):
@@ -3533,6 +3720,11 @@ ZIP_STREAMING_PACK_REQUERY_ORACLE = """
     FROM m GROUP BY shard
 """
 
+query(
+    "zip_streaming_pack_requery",
+    ZIP_STREAMING_PACK_REQUERY_ORACLE,
+)(zip_streaming_pack_requery)
+
 
 def audio_mp3_frames_probe(spark, sf_dir):
     """L5m MP3 frame-walk probe (staged r10-cont; the compressed
@@ -3586,6 +3778,11 @@ AUDIO_MP3_FRAMES_PROBE_ORACLE = """
     FROM f GROUP BY doc_id
 """
 
+query(
+    "audio_mp3_frames_probe",
+    AUDIO_MP3_FRAMES_PROBE_ORACLE,
+)(audio_mp3_frames_probe)
+
 
 def classifier_calibration_bins(spark, sf_dir):
     """L58 classifier calibration audit (staged r10-cont; the
@@ -3637,6 +3834,11 @@ CLASSIFIER_CALIBRATION_BINS_ORACLE = (
     " AS BIGINT) AS ok_ppm\n"
     "FROM b GROUP BY bin"
 ).format(cls=TEXT_QUALITY_CLASSIFIER_ORACLE, gq=TEXT_GOPHER_QUALITY_ORACLE)
+
+query(
+    "classifier_calibration_bins",
+    CLASSIFIER_CALIBRATION_BINS_ORACLE,
+)(classifier_calibration_bins)
 
 
 def dedup_minhash_incremental(spark, sf_dir):
@@ -3730,6 +3932,11 @@ DEDUP_MINHASH_INCREMENTAL_ORACLE = r"""
     LEFT JOIN agg a USING (doc_id)
 """
 
+query(
+    "dedup_minhash_incremental",
+    DEDUP_MINHASH_INCREMENTAL_ORACLE,
+)(dedup_minhash_incremental)
+
 
 def dedup_minhash_incremental_grow(spark, sf_dir):
     """L13c INCREMENTAL fuzzy dedup, BOTH-SIDES-GROW regime (staged
@@ -3819,6 +4026,11 @@ DEDUP_MINHASH_INCREMENTAL_GROW_ORACLE = r"""
     LEFT JOIN agg a USING (doc_id)
 """
 
+query(
+    "dedup_minhash_incremental_grow",
+    DEDUP_MINHASH_INCREMENTAL_GROW_ORACLE,
+)(dedup_minhash_incremental_grow)
+
 
 def multimodal_tiff_probe(spark, sf_dir):
     """L5t TIFF pixel decode at driver grade (staged r10-cont; the
@@ -3866,6 +4078,11 @@ MULTIMODAL_TIFF_PROBE_ORACLE = """
     WHERE g.x < d.doc_id % 5 + 4 AND gy.y < d.doc_id % 7 + 3
     GROUP BY d.doc_id
 """
+
+query(
+    "multimodal_tiff_probe",
+    MULTIMODAL_TIFF_PROBE_ORACLE,
+)(multimodal_tiff_probe)
 
 
 def events_rate_anomalies(spark, sf_dir):
@@ -3942,6 +4159,11 @@ EVENTS_RATE_ANOMALIES_ORACLE = """
     FROM b WHERE n_base = 24
 """
 
+query(
+    "events_rate_anomalies",
+    EVENTS_RATE_ANOMALIES_ORACLE,
+)(events_rate_anomalies)
+
 
 def events_last_touch_attribution(spark, sf_dir):
     """L57 last-touch conversion attribution (staged r10-cont; the
@@ -4015,6 +4237,11 @@ EVENTS_LAST_TOUCH_ATTRIBUTION_ORACLE = """
     FROM m GROUP BY touch_type
 """
 
+query(
+    "events_last_touch_attribution",
+    EVENTS_LAST_TOUCH_ATTRIBUTION_ORACLE,
+)(events_last_touch_attribution)
+
 
 def multimodal_gif_probe(spark, sf_dir):
     """L5g GIF pixel decode at driver grade (staged r10-cont; the
@@ -4071,6 +4298,11 @@ MULTIMODAL_GIF_PROBE_ORACLE = """
     WHERE g.x < d.doc_id % 5 + 4 AND gy.y < d.doc_id % 7 + 3
     GROUP BY d.doc_id
 """
+
+query(
+    "multimodal_gif_probe",
+    MULTIMODAL_GIF_PROBE_ORACLE,
+)(multimodal_gif_probe)
 
 
 def streaming_sketch_requery(spark, sf_dir):
@@ -4155,6 +4387,11 @@ def streaming_sketch_requery(spark, sf_dir):
         .orderBy(F.col("exact_cnt").desc(), F.col("user_id").asc())
         .limit(10)
     )
+
+query(
+    "streaming_sketch_requery",
+    EVENTS_HEAVY_HITTERS_CMS_ORACLE,
+)(streaming_sketch_requery)
 
 
 def mixture_temperature_budget(spark, sf_dir):
@@ -4249,6 +4486,11 @@ MIXTURE_TEMPERATURE_BUDGET_ORACLE = r"""
     GROUP BY 1, 2, 3, 4
 """
 
+query(
+    "mixture_temperature_budget",
+    MIXTURE_TEMPERATURE_BUDGET_ORACLE,
+)(mixture_temperature_budget)
+
 
 def ann_ivf_pq_batched(spark, sf_dir):
     """L51b IVF+PQ index REUSE across query batches (the r12
@@ -4309,6 +4551,8 @@ ANN_IVF_PQ_BATCHED_ORACLE = (
     + _ivf_pq_oracle_for_batch("vec_id >= 5 AND vec_id < 10", 2)
 )
 
+query("ann_ivf_pq_batched", ANN_IVF_PQ_BATCHED_ORACLE)(ann_ivf_pq_batched)
+
 
 def bpe_merges_file_roundtrip(spark, sf_dir):
     """L28c the merges.txt SEAM driven under the oracle gate (VERDICT
@@ -4355,6 +4599,11 @@ BPE_MERGES_FILE_ROUNDTRIP_ORACLE = (
     + BPE_ENCODE_CORPUS_ORACLE
     + ")"
 )
+
+query(
+    "bpe_merges_file_roundtrip",
+    BPE_MERGES_FILE_ROUNDTRIP_ORACLE,
+)(bpe_merges_file_roundtrip)
 
 
 def hf_tokenizer_file_roundtrip(spark, sf_dir):
@@ -4463,6 +4712,11 @@ def _hf_tokenizer_oracle() -> str:
     FROM s4"""
     return BPE_ENCODE_CORPUS_ORACLE.replace(marker, final)
 
+query(
+    "hf_tokenizer_file_roundtrip",
+    _hf_tokenizer_oracle(),
+)(hf_tokenizer_file_roundtrip)
+
 
 def audio_mp3_sideinfo_probe(spark, sf_dir):
     """L5m2 MP3 side-info + bit-reservoir decode (VERDICT r13
@@ -4525,11 +4779,12 @@ AUDIO_MP3_SIDEINFO_PROBE_ORACLE = """
     FROM fg GROUP BY doc_id
 """
 
+query(
+    "audio_mp3_sideinfo_probe",
+    AUDIO_MP3_SIDEINFO_PROBE_ORACLE,
+)(audio_mp3_sideinfo_probe)
 
-# Every staged pair, flipped or not — the registry's r8 flip block
-# registers the FLIPPED_R8 subset from here (the functions stay in
-# this module; registration is by reference, so the code, docstrings
-# and tests keep one home).
+
 def dedup_soft_weights(spark, sf_dir):
     """L1b SOFT deduplication — down-weight duplicates instead of
     dropping them (SoftDedup, Xue et al., ACL 2024; the 1/count
@@ -4563,6 +4818,8 @@ DEDUP_SOFT_WEIGHTS_ORACLE = r"""
            doc_id = keep_id AS is_canonical
     FROM f JOIN c USING (fp)
 """
+
+query("dedup_soft_weights", DEDUP_SOFT_WEIGHTS_ORACLE)(dedup_soft_weights)
 
 
 def dedup_soft_weights_fuzzy(spark, sf_dir):
@@ -4618,6 +4875,11 @@ def _soft_weights_fuzzy_oracle() -> str:
            m.doc_id = s.keep_id AS is_canonical
     FROM memb m JOIN szs s USING (cluster_id)
 """
+
+query(
+    "dedup_soft_weights_fuzzy",
+    _soft_weights_fuzzy_oracle(),
+)(dedup_soft_weights_fuzzy)
 
 
 def data_selection_moore_lewis(spark, sf_dir):
@@ -4698,456 +4960,7 @@ DATA_SELECTION_MOORE_LEWIS_ORACLE = r"""
     SELECT doc_id, 0, 0, 0, NULL, false FROM tok WHERE len(t) < 2
 """
 
-
-ALL_CANDIDATES = {
-    "dedup_soft_weights": (dedup_soft_weights, DEDUP_SOFT_WEIGHTS_ORACLE),
-    "dedup_soft_weights_fuzzy": (
-        dedup_soft_weights_fuzzy,
-        _soft_weights_fuzzy_oracle(),
-    ),
-    "data_selection_moore_lewis": (
-        data_selection_moore_lewis,
-        DATA_SELECTION_MOORE_LEWIS_ORACLE,
-    ),
-    "ann_ivf_pq_batched": (ann_ivf_pq_batched, ANN_IVF_PQ_BATCHED_ORACLE),
-    "bpe_merges_file_roundtrip": (
-        bpe_merges_file_roundtrip,
-        BPE_MERGES_FILE_ROUNDTRIP_ORACLE,
-    ),
-    "hf_tokenizer_file_roundtrip": (
-        hf_tokenizer_file_roundtrip,
-        _hf_tokenizer_oracle(),
-    ),
-    "audio_mp3_sideinfo_probe": (
-        audio_mp3_sideinfo_probe,
-        AUDIO_MP3_SIDEINFO_PROBE_ORACLE,
-    ),
-    "multimodal_jpeg_progressive_probe": (
-        multimodal_jpeg_progressive_probe,
-        MULTIMODAL_JPEG_PROGRESSIVE_ORACLE,
-    ),
-    "url_robots_filter": (url_robots_filter, URL_ROBOTS_FILTER_ORACLE),
-    "dedup_semantic_centroid": (
-        dedup_semantic_centroid,
-        DEDUP_SEMANTIC_CENTROID_ORACLE,
-    ),
-    "dedup_substring_groups": (
-        dedup_substring_groups,
-        DEDUP_SUBSTRING_GROUPS_ORACLE,
-    ),
-    "dedup_substring_removal": (
-        dedup_substring_removal,
-        DEDUP_SUBSTRING_REMOVAL_ORACLE,
-    ),
-    "text_lm_perplexity": (text_lm_perplexity, TEXT_LM_PERPLEXITY_ORACLE),
-    "text_unicode_hygiene": (
-        text_unicode_hygiene,
-        TEXT_UNICODE_HYGIENE_ORACLE,
-    ),
-    "text_blocklist": (text_blocklist, TEXT_BLOCKLIST_ORACLE),
-    "text_gopher_quality": (text_gopher_quality, TEXT_GOPHER_QUALITY_ORACLE),
-    "text_gopher_repetition": (
-        text_gopher_repetition,
-        TEXT_GOPHER_REPETITION_ORACLE,
-    ),
-    "dedup_lines_corpus": (dedup_lines_corpus, DEDUP_LINES_CORPUS_ORACLE),
-    "text_quality_classifier": (
-        text_quality_classifier,
-        TEXT_QUALITY_CLASSIFIER_ORACLE,
-    ),
-    "warc_meta_noindex": (warc_meta_noindex, WARC_META_NOINDEX_ORACLE),
-    "multimodal_image_ahash": (
-        multimodal_image_ahash,
-        MULTIMODAL_IMAGE_AHASH_ORACLE,
-    ),
-    "multimodal_png_probe": (multimodal_png_probe, MULTIMODAL_PNG_PROBE_ORACLE),
-    "bpe_encode_corpus": (bpe_encode_corpus, BPE_ENCODE_CORPUS_ORACLE),
-    "multimodal_image_phash": (
-        multimodal_image_phash,
-        MULTIMODAL_IMAGE_PHASH_ORACLE,
-    ),
-    "audio_pitch_probe": (audio_pitch_probe, AUDIO_PITCH_PROBE_ORACLE),
-    "multimodal_exif_probe": (
-        multimodal_exif_probe,
-        MULTIMODAL_EXIF_PROBE_ORACLE,
-    ),
-    "multimodal_video_scenes": (
-        multimodal_video_scenes,
-        MULTIMODAL_VIDEO_SCENES_ORACLE,
-    ),
-    "graph_pagerank": (graph_pagerank, GRAPH_PAGERANK_ORACLE),
-    "retrieval_tfidf_topk": (retrieval_tfidf_topk, RETRIEVAL_TFIDF_TOPK_ORACLE),
-    "csv_roundtrip_agg": (csv_roundtrip_agg, CSV_ROUNDTRIP_AGG_ORACLE),
-    "dedup_image_phash_groups": (
-        dedup_image_phash_groups,
-        DEDUP_IMAGE_PHASH_GROUPS_ORACLE,
-    ),
-    "audio_segments_probe": (audio_segments_probe, AUDIO_SEGMENTS_PROBE_ORACLE),
-    "text_lexical_diversity": (
-        text_lexical_diversity,
-        TEXT_LEXICAL_DIVERSITY_ORACLE,
-    ),
-    "text_code_detect": (text_code_detect, TEXT_CODE_DETECT_ORACLE),
-    "embedding_matryoshka_audit": (
-        embedding_matryoshka_audit,
-        EMBEDDING_MATRYOSHKA_AUDIT_ORACLE,
-    ),
-    "embedding_pq_audit": (embedding_pq_audit, EMBEDDING_PQ_AUDIT_ORACLE),
-    "events_rolling_actives": (
-        events_rolling_actives,
-        EVENTS_ROLLING_ACTIVES_ORACLE,
-    ),
-    "sketch_rollup_actives": (
-        sketch_rollup_actives,
-        SKETCH_ROLLUP_ACTIVES_ORACLE,
-    ),
-    "corpus_build_pipeline": (
-        corpus_build_pipeline,
-        CORPUS_BUILD_PIPELINE_ORACLE,
-    ),
-    "text_curation_verdict": (
-        text_curation_verdict,
-        TEXT_CURATION_VERDICT_ORACLE,
-    ),
-    # staged in r8 for the r9 wave (VERDICT r7 directive #9): the
-    # token-window + suffix-array ExactSubstr composition
-    "dedup_exact_substr_combined": (
-        dedup_exact_substr_combined,
-        DEDUP_EXACT_SUBSTR_COMBINED_ORACLE,
-    ),
-    # staged in r8 for the r9 wave (VERDICT r7 missing #5): fixed-point
-    # BM25 completing the retrieval ladder next to exact TF-IDF
-    "retrieval_bm25_topk": (retrieval_bm25_topk, RETRIEVAL_BM25_TOPK_ORACLE),
-    # r9 (VERDICT r8 directive #8): the float-BM25 twin behind the
-    # fixed-point contract, driver-proven through this all-integer
-    # rank-agreement audit
-    "retrieval_bm25_rank_agreement": (
-        retrieval_bm25_rank_agreement,
-        RETRIEVAL_BM25_RANK_AGREEMENT_ORACLE,
-    ),
-    # staged in r9 for the r10 wave-3 flip: DSIR importance resampling
-    "data_selection_dsir": (data_selection_dsir, DATA_SELECTION_DSIR_ORACLE),
-    # staged in r9 for the r10 wave-3 flip: IVF+PQ two-stage ANN
-    "ann_ivf_pq_search": (ann_ivf_pq_search, ANN_IVF_PQ_SEARCH_ORACLE),
-    # staged in r9 for the r10 wave-3 flip: the curation gate as a
-    # Structured Streaming stage, oracled by the batch composition
-    "streaming_curation_requery": (
-        streaming_curation_requery,
-        TEXT_CURATION_VERDICT_ORACLE,
-    ),
-    # staged in r9 for the r10 wave-3 flip: the hygiene pair's FIX half
-    "text_unicode_repair": (text_unicode_repair, TEXT_UNICODE_REPAIR_ORACLE),
-    # staged in r10 for the r11 window: exact n-gram Jaccard pairs —
-    # the estimate-vs-exact twin of the MinHash sketch rows
-    "dedup_jaccard_ngram": (dedup_jaccard_ngram, DEDUP_JACCARD_NGRAM_ORACLE),
-    # staged in r10 for the r11 window: the sketch-error audit over
-    # exactly the pairs the banded MinHash twin reports
-    "dedup_jaccard_minhash_agreement": (
-        dedup_jaccard_minhash_agreement,
-        DEDUP_JACCARD_MINHASH_AGREEMENT_ORACLE,
-    ),
-    # staged in r10 for the r11 window: exact-Jaccard clusters +
-    # keepers — the fully-replayable composition of the exact pair
-    # row with connected components and the keeper window
-    "dedup_jaccard_clusters": (
-        dedup_jaccard_clusters,
-        DEDUP_JACCARD_CLUSTERS_ORACLE,
-    ),
-    # staged in r10-cont: count-min heavy hitters — the frequency
-    # twin of the HLL rollup, md5-replayable cells, per-day partials
-    # merged by cell-wise sum
-    "events_heavy_hitters_cms": (
-        events_heavy_hitters_cms,
-        EVENTS_HEAVY_HITTERS_CMS_ORACLE,
-    ),
-    # staged in r10-cont: contrastive hard-negative mining over the
-    # exact cosine machinery (label-inequality broadcast join)
-    "embedding_hard_negatives": (
-        embedding_hard_negatives,
-        EMBEDDING_HARD_NEGATIVES_ORACLE,
-    ),
-    # staged in r10-cont: tokenizer fertility diagnostics per lang
-    "text_token_fertility": (
-        text_token_fertility,
-        TEXT_TOKEN_FERTILITY_ORACLE,
-    ),
-    # staged in r10-cont: the CMS ingest as a real availableNow
-    # stream — per-batch partial cells via foreachBatch, merged by
-    # cell-wise sum; oracled by the batch heavy-hitter oracle verbatim
-    "streaming_sketch_requery": (
-        streaming_sketch_requery,
-        EVENTS_HEAVY_HITTERS_CMS_ORACLE,
-    ),
-    # staged in r10-cont: alpha=0.5 temperature mixture budgeting —
-    # floor(sqrt) weights, integer-DIV allocation, per-source draw
-    "mixture_temperature_budget": (
-        mixture_temperature_budget,
-        MIXTURE_TEMPERATURE_BUDGET_ORACLE,
-    ),
-    # staged in r10-cont: GIF/LZW pixel decode — codegen synth of
-    # spec-valid GIF89a, genuine variable-width LZW decoder
-    "multimodal_gif_probe": (
-        multimodal_gif_probe,
-        MULTIMODAL_GIF_PROBE_ORACLE,
-    ),
-    # staged in r10-cont: integer 3-sigma hourly rate anomalies —
-    # denominators cleared so the z-test is pure int64
-    "events_rate_anomalies": (
-        events_rate_anomalies,
-        EVENTS_RATE_ANOMALIES_ORACLE,
-    ),
-    # staged in r10-cont: last-touch revenue attribution over the
-    # as-of join with a 7-day lookback; money pinned as cents
-    "events_last_touch_attribution": (
-        events_last_touch_attribution,
-        EVENTS_LAST_TOUCH_ATTRIBUTION_ORACLE,
-    ),
-    # staged in r10-cont: baseline TIFF pixel decode — real IFD walk,
-    # multi-strip capable, over codegen-synthesized containers
-    "multimodal_tiff_probe": (
-        multimodal_tiff_probe,
-        MULTIMODAL_TIFF_PROBE_ORACLE,
-    ),
-    # staged in r10-cont: incremental FUZZY dedup — batch band sigs
-    # vs the stored md5-MinHash band index, corpus never re-shingled
-    "dedup_minhash_incremental": (
-        dedup_minhash_incremental,
-        DEDUP_MINHASH_INCREMENTAL_ORACLE,
-    ),
-    # staged in r10-cont: classifier reliability bins vs the Gopher
-    # verdict — calibration as measured ppm data
-    "classifier_calibration_bins": (
-        classifier_calibration_bins,
-        CLASSIFIER_CALIBRATION_BINS_ORACLE,
-    ),
-    # staged in r10-cont: VBR MP3 frame walk — per-frame stride from
-    # each frame's own header, exact stream consumption
-    "audio_mp3_frames_probe": (
-        audio_mp3_frames_probe,
-        AUDIO_MP3_FRAMES_PROBE_ORACLE,
-    ),
-    # staged in r10-cont: WebDataset tar shards — codegen pack, real
-    # ustar walk, content-level md5 roundtrip per shard
-    "tar_webdataset_probe": (
-        tar_webdataset_probe,
-        TAR_WEBDATASET_PROBE_ORACLE,
-    ),
-    # staged in r10-cont: epoch-aware source upsampling with the
-    # interleave (anti-clumping) audit
-    "mixture_epoch_upsampling": (
-        mixture_epoch_upsampling,
-        MIXTURE_EPOCH_UPSAMPLING_ORACLE,
-    ),
-    # staged in r10-cont: STORED-entry ZIP archives — codegen pack
-    # with real CRC-32s, real reader with per-entry CRC verification
-    "zip_archive_probe": (zip_archive_probe, ZIP_ARCHIVE_PROBE_ORACLE),
-    # staged in r10-cont: reciprocal-rank fusion of the BM25 and
-    # TF-IDF rankers — exact-integer fused scores, full-outer rank
-    # semantics, consensus flag
-    "retrieval_rrf_fusion": (
-        retrieval_rrf_fusion,
-        RETRIEVAL_RRF_FUSION_ORACLE,
-    ),
-    # staged in r11 (VERDICT r10 directive #3): the PRODUCTION
-    # streaming container packers — derived shard count, per-shard
-    # streaming file writers, binaryFile re-read requery
-    "tar_streaming_pack_requery": (
-        tar_streaming_pack_requery,
-        TAR_STREAMING_PACK_REQUERY_ORACLE,
-    ),
-    # staged in r11: the WebDataset CONSUMPTION primitive — samples
-    # (one row per {key}.{ext} member group) through the production
-    # packer + binaryFile re-read
-    "tar_webdataset_samples": (
-        tar_webdataset_samples,
-        TAR_WEBDATASET_SAMPLES_ORACLE,
-    ),
-    "zip_streaming_pack_requery": (
-        zip_streaming_pack_requery,
-        ZIP_STREAMING_PACK_REQUERY_ORACLE,
-    ),
-    # staged in r11 (VERDICT r10 directive #7): incremental fuzzy
-    # dedup in the BOTH-SIDES-GROW regime — the proportional-split
-    # scratch probe promoted to an oracle-pinned row
-    "dedup_minhash_incremental_grow": (
-        dedup_minhash_incremental_grow,
-        DEDUP_MINHASH_INCREMENTAL_GROW_ORACLE,
-    ),
-}
-
-# The r8 WAVE-1 flip (VERDICT r7 directives #1/#2/#3/#6): these names
-# are registered as driver-gate queries by registry.py's flip block
-# and are therefore no longer "staged". Wave 2 (the STAGED_CANDIDATES
-# remainder below) flips in r9.
-FLIPPED_R8 = (
-    # the user-facing curation chain, landed as a whole
-    "text_gopher_quality", "text_gopher_repetition",
-    "text_unicode_hygiene", "text_blocklist", "text_quality_classifier",
-    "text_curation_verdict", "dedup_lines_corpus", "text_lm_perplexity",
-    "corpus_build_pipeline",
-    # graph / retrieval / suffix-array / sources
-    "graph_pagerank", "retrieval_tfidf_topk",
-    "dedup_substring_groups", "dedup_substring_removal",
-    "csv_roundtrip_agg",
-    # directive #2: progressive JPEG under the gate
-    "multimodal_jpeg_progressive_probe",
-    # directive #3: robots with RFC 9309 Allow precedence
-    "url_robots_filter",
-    # directive #6: the BPE encode half (the composed roundtrip row is
-    # defined directly in registry.py)
-    "bpe_encode_corpus",
-)
-
-# The r9 WAVE-2 flip (VERDICT r8 directive #1's nine named rows, in
-# its priority order, plus directive #8's new rank-agreement audit —
-# which also drives the float-BM25 twin end-to-end under the gate).
-FLIPPED_R9 = (
-    "retrieval_bm25_topk",
-    "dedup_exact_substr_combined",
-    "events_rolling_actives",
-    "sketch_rollup_actives",
-    "embedding_pq_audit",
-    "multimodal_png_probe",
-    "text_lexical_diversity",
-    "text_code_detect",
-    "warc_meta_noindex",
-    "retrieval_bm25_rank_agreement",
-)
-
-# The r10 WAVE-2b flip (VERDICT r9 directive #1, the named ten): the
-# nine media/ANN rows staged since r7 behind the shared
-# generative-replay harness, plus DSIR — data selection joining the
-# driver gate. ann_ivf_pq_search, streaming_curation_requery and
-# text_unicode_repair are HELD for r11 exactly as the directive
-# ordered (10 new = 20% of the window, the ceiling the 80%
-# re-confirmation floor implies; 13 would have breached it).
-FLIPPED_R10 = (
-    "multimodal_image_ahash",
-    "multimodal_image_phash",
-    "dedup_image_phash_groups",
-    "multimodal_exif_probe",
-    "multimodal_video_scenes",
-    "audio_pitch_probe",
-    "audio_segments_probe",
-    "dedup_semantic_centroid",
-    "embedding_matryoshka_audit",
-    "data_selection_dsir",
-)
-
-# --- the r11 flip (VERDICT r10 directive #1 / the CHECKED.md REVISED
-# rotation plan, executed verbatim): the VERDICT-r9 hold-three FIRST
-# (held once, not held twice — ann_ivf_pq_search flips with its
-# directive-#4 cost/recall fix landed and measured), the three
-# exact-Jaccard rows, then four continuation rows chosen to spread
-# families (sketches, incremental dedup, ANN mining, media).
-FLIPPED_R11 = (
-    "ann_ivf_pq_search",
-    "streaming_curation_requery",
-    "text_unicode_repair",
-    "dedup_jaccard_ngram",
-    "dedup_jaccard_minhash_agreement",
-    "dedup_jaccard_clusters",
-    "events_heavy_hitters_cms",
-    "dedup_minhash_incremental",
-    "embedding_hard_negatives",
-    "multimodal_gif_probe",
-)
-
-# --- the r12 flip (VERDICT r11 directive #1 / the CHECKED.md r12
-# rotation plan, executed verbatim): the ten longest-staged r10-era
-# rows, in the plan's priority order — tokenizer fertility, the
-# streaming CM-sketch ingest, temperature mixture budgeting, the two
-# event-analytics rows, TIFF decode, classifier calibration, the VBR
-# MP3 frame walk, and the two container fixture probes.
-FLIPPED_R12 = (
-    "text_token_fertility",
-    "streaming_sketch_requery",
-    "mixture_temperature_budget",
-    "events_rate_anomalies",
-    "events_last_touch_attribution",
-    "multimodal_tiff_probe",
-    "classifier_calibration_bins",
-    "audio_mp3_frames_probe",
-    "tar_webdataset_probe",
-    "zip_archive_probe",
-)
-
-# --- the r13 flip (VERDICT r12 directive #1 / the CHECKED.md r13
-# rotation plan, executed verbatim): the ENTIRE remaining 8-row staged
-# pool — the pool drains to ZERO. From r13 on, new operators land
-# directly in queries() when their oracle is expressible, or stage for
-# AT MOST one round (VERDICT r12 directive #2).
-FLIPPED_R13 = (
-    "mixture_epoch_upsampling",
-    "retrieval_rrf_fusion",
-    "tar_streaming_pack_requery",
-    "zip_streaming_pack_requery",
-    "dedup_minhash_incremental_grow",
-    "tar_webdataset_samples",
-    "ann_ivf_pq_batched",
-    "bpe_merges_file_roundtrip",
-)
-
-FLIPPED_R14 = (
-    # VERDICT r13 directive #1: the ENTIRE 3-row r13 staged pool
-    # flips — dedup_soft_weights (SoftDedup 1/count down-weighting),
-    # dedup_soft_weights_fuzzy (the full SoftDedup method over
-    # transitively-closed near-dup clusters),
-    # data_selection_moore_lewis (cross-entropy-difference
-    # selection). Each was oracle-proven at sf0.001/sf0.01/sf0.1 at
-    # staging (CHECKED.md r13) and suite-gated every round since.
-    "dedup_soft_weights",
-    "dedup_soft_weights_fuzzy",
+query(
     "data_selection_moore_lewis",
-    # registered AT BIRTH this round (directive #2 invariant; VERDICT
-    # r13 directive #7a/#7b): the vocab.json + merges.txt two-file
-    # tokenizer seam and the MP3 side-info/bit-reservoir content
-    # decode, both oracle-gated from their first round
-    "hf_tokenizer_file_roundtrip",
-    "audio_mp3_sideinfo_probe",
-)
-
-FLIPPED = (
-    FLIPPED_R8 + FLIPPED_R9 + FLIPPED_R10 + FLIPPED_R11 + FLIPPED_R12
-    + FLIPPED_R13 + FLIPPED_R14
-)
-
-# Still-staged candidates — the r14 flip drained the pool to ZERO
-# again (VERDICT r13 directive #1); new operators register AT BIRTH
-# (the directive-#2 invariant), so this stays empty unless a
-# round-end build genuinely needs one staged round of suite gating.
-STAGED_CANDIDATES = {
-    k: v for k, v in ALL_CANDIDATES.items() if k not in FLIPPED
-}
-assert set(FLIPPED) <= set(ALL_CANDIDATES)
-assert len(set(FLIPPED)) == len(FLIPPED)
-assert len(STAGED_CANDIDATES) == len(ALL_CANDIDATES) - len(FLIPPED)
-
-
-# --- the r8 wave-1 registration itself ---------------------------------
-# Registration by reference (the pairs above are lifted verbatim, as
-# the staging contract promised). This runs at the END of this module
-# so it is circular-import-safe in both directions: registry.py's flip
-# block does ``from . import candidates``, and a direct
-# ``import hustle_spark.candidates`` first executes registry fully
-# (whose own flip import then binds this still-initializing module
-# WITHOUT touching attributes) before this tail runs.
-from . import registry as _registry  # noqa: E402
-
-for _name in FLIPPED:
-    _fn, _oracle = ALL_CANDIDATES[_name]
-    _registry.QUERIES[_name] = _registry.Query(_name, _fn, _oracle)
-
-# audio_vad_table_probe's oracle (deferred from its registry.py
-# definition): the audio_segments_probe replay shared BY REFERENCE
-# from this module, minus the 'recovered' audit column (the row gates
-# the LOADER, not boundary recovery), plus the loaded step count.
-# Bound here — the only point that runs after both modules finish
-# initializing in either import order — so the generative model and
-# the window classifier can never drift between the two rows.
-_registry.QUERIES["audio_vad_table_probe"].oracle = (
-    "SELECT media_id, media_type, n_samples, n_windows, n_segments,"
-    " n_speech_windows, ok, CAST(3 AS BIGINT) AS n_steps_loaded FROM ("
-    + AUDIO_SEGMENTS_PROBE_ORACLE
-    + ")"
-)
+    DATA_SELECTION_MOORE_LEWIS_ORACLE,
+)(data_selection_moore_lewis)

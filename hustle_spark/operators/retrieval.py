@@ -122,7 +122,12 @@ def bm25_tf_frame(
     Single-curve callers keep the default LAZY frame: with only two tf
     consumers over the cached base the checkpoint action costs more
     than the replay it saves (bm25_topk 1.04 -> 1.23 s when frozen —
-    the r14 tiny-frame lesson)."""
+    the r14 tiny-frame lesson).
+
+    The frozen tf blocks are not tracked: ``util.release_cached()``
+    does not free them. ``util.release_all_persistent()`` at a query
+    boundary does, or the ContextCleaner once the frame is
+    garbage-collected."""
     from ..util import release_frames, tracked_cache
 
     spark = docs.sparkSession

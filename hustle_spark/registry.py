@@ -76,6 +76,9 @@ def _cat(spark: SparkSession, sf_dir: str) -> h.Catalog:
 
 
 def query(name: str, oracle: str | None = None):
+    if name in QUERIES:
+        raise ValueError(f"query {name!r} is already registered")
+
     def deco(fn):
         QUERIES[name] = Query(name, fn, oracle)
         return fn
@@ -6873,29 +6876,8 @@ def audio_vad_table_probe(spark, sf_dir):
     ).withColumn("n_steps_loaded", F.lit(len(table)).cast("bigint"))
 
 
-# The audio_segments_probe replay minus its 'recovered' audit column
-# (this row gates the LOADER, not the boundary-recovery property),
-# plus the loaded step count. Bound from the candidates module's
-# oracle constant at the flip import below — see the tail of this
-# file.
-
-
-# =====================================================================
-# round-8 wave-1 candidate flip
-# =====================================================================
-# The 17 FLIPPED_R8 pairs (hustle_spark/candidates.py) register into
-# QUERIES when the candidates module finishes importing — importing it
-# here is the flip. Registration is by reference: the staged (query,
-# oracle) pairs are lifted verbatim, exactly as the staging contract
-# and VERDICT r7 directive #1 specified; the code keeps its one home.
-from . import candidates as _candidates_flip  # noqa: E402, F401
-
-# audio_vad_table_probe's oracle (deferred from its definition above)
-# is bound at the TAIL of candidates.py — the only point that runs
-# after BOTH modules finish initializing in either import order (a
-# binding here reads candidates attributes that do not exist yet when
-# candidates is imported first and executes this module from its own
-# line 34).
+# Registers candidates.py's rows and audio_vad_table_probe's oracle.
+from . import candidates as _candidates  # noqa: E402, F401
 
 
 # =====================================================================

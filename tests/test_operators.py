@@ -537,6 +537,28 @@ def test_repeated_substring_removal_rules(spark):
     assert within[1] > 0
 
 
+def test_repeated_substring_removal_null_id_is_not_a_document(spark):
+    """A NULL doc id does not count toward min_docs: a repeat shared
+    only with a NULL-id row is not cross-document, so nothing is cut
+    (repeated_substring_groups' count_distinct skips NULL ids too)."""
+    from hustle_spark.operators.suffixes import repeated_substring_removal
+
+    rows = [
+        (None, "zzzzzzzzqqqqqqqq unique one"),
+        (1, "zzzzzzzzqqqqqqqq unique two"),
+        (2, "nothing in common with them"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        r.doc_id: r.n_removed
+        for r in repeated_substring_removal(
+            df, min_len=16, min_docs=2
+        ).collect()
+    }
+    assert got[1] == 0
+    assert got[2] == 0
+
+
 def test_repeated_substring_removal_matches_duckdb(spark, catalog, duck):
     """Differential replay of the cut over a bounded document sample:
     member marks, interval merge, and gap-substring rebuild reproduced

@@ -65,6 +65,22 @@ def test_window_priority_ordering():
     assert set(osql) <= set(names)
 
 
+def test_query_rejects_duplicate_name():
+    """registry.query refuses a name that is already registered, so a
+    second row can never silently replace the first."""
+    from hustle_spark import registry
+
+    original = registry.QUERIES["q1_pricing_summary"]
+    try:
+        with pytest.raises(ValueError, match="q1_pricing_summary"):
+            registry.query("q1_pricing_summary", "SELECT 1")(
+                lambda spark, sf_dir: None
+            )
+        assert registry.QUERIES["q1_pricing_summary"] is original
+    finally:
+        registry.QUERIES["q1_pricing_summary"] = original
+
+
 def test_lifecycle_queries_rerun_stable(spark):
     """The scratch-writing lifecycle queries must be RE-RUNNABLE in one
     session with identical results (the driver, check_oracle, and an
